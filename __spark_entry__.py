@@ -609,33 +609,13 @@ def _df_capped(
 
 
 def _gram_pair_overlaps(cand: DataFrame, kept: DataFrame) -> DataFrame:
-    """Exact shared-gram counts for candidate (src, dst) pairs.
-
-    Dictionary-encodes the vocabulary (dense rank over the sorted
-    distinct grams — deterministic; the distinct-vocab sort is tiny
-    relative to the index), builds one sorted gram-id array per doc,
-    and counts intersections with the tiled searchsorted engine
-    (operators/verify.py pair_overlap_counts).  Gram ids are bijective
-    with grams, so counts equal the string-join's exactly; candidate
-    duplicates are deduped tile-locally (the callers drop their
-    distinct())."""
+    """Exact shared-gram counts for distinct candidate (src, dst) pairs
+    (operators/verify.py pair_overlap_counts): one gram list per doc
+    from *kept* (distinct per doc), intersections counted in the JVM."""
     from photo_dedup_spark.operators.verify import pair_overlap_counts
 
-    spark = cand.sparkSession
-    vocab = (
-        kept.select("gram")
-        .distinct()
-        .select("gram", F.row_number().over(Window.orderBy("gram")).alias("gid"))
-    )
-    doc_sets = (
-        kept.join(vocab, "gram")
-        .groupBy("doc_id")
-        .agg(F.array_sort(F.collect_list(F.col("gid").cast("long"))).alias("ids"))
-    )
-    p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return pair_overlap_counts(
-        cand, doc_sets, tile_blocks=16, num_partitions=p, dedup_pairs=True
-    )
+    sets = kept.groupBy("doc_id").agg(F.collect_list("gram").alias("grams"))
+    return pair_overlap_counts(cand, sets)
 
 
 def _bucket_pair_counts(kept: DataFrame, block_cols: list[str]) -> DataFrame:
@@ -786,9 +766,11 @@ def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # k = sz − ⌈0.9·sz⌉ + 1 grams (fixed global (df, gram) order) is
     # shared — fewer than k missing grams would leave inter < 0.9·sz.
     # So candidates = every doc's k-prefix joined against the full
-    # index, and exact intersections come from the tiled searchsorted
-    # counter; pairs sharing a gram but below the threshold were
-    # dropped by the final WHERE anyway.
+    # index; pairs sharing a gram but below the threshold were dropped
+    # by the final WHERE anyway.  Exact intersections are counted in
+    # the JVM on per-doc gram lists (_gram_pair_overlaps); their string
+    # bytes measure 2.66× the text bytes here, and Spark broadcasts
+    # them when its size estimate is under the broadcast threshold.
     kept_df = _df_capped(grams, ["gram"], _NGRAM_DF_CAP, keep_df=True)
     kept = kept_df.drop("df")
     sizes = kept.groupBy("doc_id").agg(F.count("*").alias("sz"))
@@ -862,11 +844,11 @@ def q_ppjoin_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     indexes only its PREFIX grams — the first |x| − ceil(τ·|x|) + 1
     grams in global-df-then-lexicographic order — because any pair with
     Jaccard ≥ τ must share at least one prefix gram (Xiao et al.,
-    PPJoin).  Candidates then get exact intersection counts by joining
-    the candidate pairs back to the full gram index — the full index
-    never self-joins, which is what cuts Σdf² candidate work by ~an
-    order of magnitude at τ=0.7 (reduction measured in
-    tests/test_oracle_parity.py and logged there).
+    PPJoin).  Candidates then get exact intersection counts from the
+    docs' full gram sets — the full index never self-joins, which is
+    what cuts Σdf² candidate work by ~an order of magnitude at τ=0.7
+    (reduction measured in tests/test_oracle_parity.py and logged
+    there).
 
     The sf corpora have almost no natural pairs above τ, so BOTH
     engines union in deterministic truncated copies of every 13th
@@ -910,12 +892,14 @@ def q_ppjoin_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # each side's set size and applies PPJoin's LENGTH filter in the
     # join (J ≥ τ ⇒ 10·min(sz) ≥ 7·max(sz), a theorem of J ≤ min/max —
     # integer-exact, so no output pair can be lost); (b) exact
-    # intersections come from the tiled searchsorted counter over
-    # per-doc sorted gram-id arrays (operators/verify.py
+    # intersections are size(array_intersect) over per-doc gram lists
+    # in the JVM (_gram_pair_overlaps → operators/verify.py
     # pair_overlap_counts) instead of re-joining every candidate
     # against the full string-keyed gram index — that attach
     # materialized Σ cand × |set| rows and was 210 s of the query's
-    # 280 s at bench sf1.0.
+    # 280 s at bench sf1.0.  The lists' string bytes measure 2.84× the
+    # text bytes (planted copies included), and Spark broadcasts them
+    # when its size estimate is under the broadcast threshold.
     prefix = (
         kept.withColumn("rk", F.row_number().over(w))
         .join(sizes, "doc_id")

@@ -35,6 +35,11 @@ def _cosine_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     return pd.Series(out)
 
 
+# query rows cosine_topk_bruteforce collects to the driver: 10k float64
+# vectors of dim 512 are a 40 MB broadcast
+MAX_QUERY_ROWS = 10_000
+
+
 def cosine_topk_bruteforce(
     embeddings: DataFrame,
     queries: DataFrame,
@@ -56,11 +61,23 @@ def cosine_topk_bruteforce(
     global top-k under the same total order: cosine desc, id asc), and
     a window over nq × k × n_batches candidate rows picks the final
     ranks.  The query side is collected + broadcast — same smallness
-    contract the broadcast cross join already relied on."""
+    contract the broadcast cross join already relied on, enforced:
+    more than :data:`MAX_QUERY_ROWS` query rows raise ``ValueError``
+    (the collect reads at most one row past the cap; a query side of
+    several partitions may take a few jobs, since the limit scans
+    partitions in growing batches until it has the rows)."""
     spark = embeddings.sparkSession
-    qrows = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
-    ).collect()
+    qrows = (
+        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"))
+        .limit(MAX_QUERY_ROWS + 1)
+        .collect()
+    )
+    if len(qrows) > MAX_QUERY_ROWS:
+        raise ValueError(
+            f"cosine_topk_bruteforce: more than {MAX_QUERY_ROWS} query rows; "
+            "the query matrix is collected to the driver and broadcast, "
+            "so split the queries into batches"
+        )
     out_schema = "query_id long, match_id long, cosine double"
     c = embeddings.select(
         F.col(id_col).alias("match_id"), F.col(vec_col).alias("cvec")

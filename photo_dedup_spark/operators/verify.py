@@ -42,11 +42,12 @@ TWO physical strategies, identical output (round-6 optimization):
     bench sf1.0 that is 656k sketch copies instead of 8.8M, a 13×
     byte cut; replicas ≤ 2×pairs ALWAYS, so the tiled form never
     ships more than the classic one).  Inside a tile the pairs are
-    scored by the same batched lexsort kernel via a doc-indexed
-    gather.  Per-tile memory is bounded by the two blocks' sketch
-    volume, which the caller controls through ``nb`` (pipeline derives
-    it from the input-scan size so block payloads stay roughly
-    constant as the corpus grows).
+    scored by the same batched searchsorted kernel
+    (:func:`_score_prepared`) via a doc-indexed gather.  Per-tile
+    memory is bounded by the two blocks' sketch volume, which the
+    caller controls through ``nb`` (pipeline derives it from the
+    input-scan size so block payloads stay roughly constant as the
+    corpus grows).
 """
 
 from __future__ import annotations
@@ -121,7 +122,7 @@ def _level_cut(u: np.ndarray, b: int, lvl: int) -> np.ndarray:
 def make_verify_udf(cfg: DedupConfig = DEFAULT_CONFIG, failure_counter=None):
     """pandas UDF (sketch_a, b_a, sketch_b, b_b) -> struct(jaccard,
     containment) via exact set arithmetic on the common sampled
-    universe (batched lexsort kernel, :func:`_score_prepared`).
+    universe (batched searchsorted kernel, :func:`_score_prepared`).
 
     *failure_counter*: optional Spark accumulator — per-pair verifier
     failures are COUNTED, not just swallowed (the reference counts
@@ -189,9 +190,9 @@ def hamming_col(sim_a, sim_b, n_words: int):
     return out
 
 
-# pair-scoring chunk inside a tile task: bounds the lexsort temporary
-# (8192 pairs × ~2×512 entries ≈ 70 MB int64 keys) regardless of how
-# many candidate pairs one tile holds
+# pair-scoring chunk inside a tile task: bounds the per-chunk gather
+# arrays and output frame (8192 pairs each) regardless of how many
+# candidate pairs one tile holds
 _TILE_PAIR_CHUNK = 8192
 
 _TILE_OUT_SCHEMA = (
@@ -408,100 +409,38 @@ def _verify_pairs_tiled(
     )
 
 
-def pair_overlap_counts(
-    pairs: DataFrame,
-    sets: DataFrame,
-    tile_blocks: int = 16,
-    num_partitions: int | None = None,
-    dedup_pairs: bool = True,
-) -> DataFrame:
-    """Exact |A ∩ B| per candidate pair over per-doc SORTED id arrays —
-    the generic tiled form of the flagship's sketch verify, used by the
-    gram-index queries (PPJoin / containment) as their count-attach.
+def pair_overlap_counts(pairs: DataFrame, sets: DataFrame) -> DataFrame:
+    """Exact |A ∩ B| per distinct candidate pair — the count-attach of
+    the gram-index queries (PPJoin / containment).
 
-    *pairs*: (src, dst); *sets*: (doc_id, ids array<long>, ascending,
-    duplicate-free).  Returns (src, dst, inter_cnt) for pairs whose BOTH
-    endpoints have a set row (inner semantics, like the join it
-    replaces); *dedup_pairs* dedups (src, dst) tile-locally, so callers
-    can skip their distinct() shuffle.
+    *pairs*: (src, dst), duplicates allowed; *sets*: (doc_id, grams
+    array<string>), duplicate-free per doc.  Returns one (src, dst,
+    inter_cnt) row per distinct pair whose BOTH endpoints have a set
+    row (inner semantics); disjoint sets give ``inter_cnt`` 0, which
+    callers filter.
 
-    Replaces ``cand ⋈ grams(src) ⋈ grams(dst) GROUP BY pair`` — which
-    materializes Σ pairs × |set| string-keyed rows through two
-    exchanges (measured 210 s for 33M candidates at bench sf1.0) —
-    with one searchsorted merge per pair against tile-local arrays:
-    payload movement is O(distinct(doc, tile) × |set|) integers.
+    The count is ``size(array_intersect(a, b))`` on the gram strings
+    themselves, evaluated in whole-stage codegen: exact by
+    construction, with no vocabulary encoding, no Python worker and no
+    hash collisions to audit.  The distinct pairs join the set table
+    once per endpoint, and Spark picks the join strategy from its own
+    statistics (plan estimates, then AQE's runtime sizes): it
+    broadcasts the set table under the broadcast threshold and
+    shuffles both sides otherwise.
+    Either way no pair row carries more than its two endpoints' lists
+    — unlike ``cand ⋈ grams(src) ⋈ grams(dst) GROUP BY pair``, which
+    materialized Σ cand × |set| rows (210 s for 33M candidates at bench
+    sf1.0).
     """
-    nb = max(2, int(tile_blocks))
-    blk_s = F.pmod(F.xxhash64("src"), F.lit(nb))
-    blk_d = F.pmod(F.xxhash64("dst"), F.lit(nb))
-    pt = pairs.select(
-        F.least(blk_s, blk_d).alias("t1"),
-        F.greatest(blk_s, blk_d).alias("t2"),
-        "src",
-        "dst",
-    ).localCheckpoint(eager=False)
-    need = (
-        pt.select("t1", "t2", F.col("src").alias("doc_id"))
-        .unionByName(pt.select("t1", "t2", F.col("dst").alias("doc_id")))
-        .distinct()
-    )
-    repl = need.join(sets.select("doc_id", "ids"), "doc_id")
-
-    def _tile(drows: pd.DataFrame, prs: pd.DataFrame) -> pd.DataFrame:
-        if prs.empty or drows.empty:
-            return pd.DataFrame(
-                {
-                    "src": pd.Series(dtype="int64"),
-                    "dst": pd.Series(dtype="int64"),
-                    "inter_cnt": pd.Series(dtype="int64"),
-                }
-            )
-        ids_raw = drows["doc_id"].to_numpy(dtype=np.int64)
-        order = np.argsort(ids_raw, kind="stable")
-        ids = ids_raw[order]
-        arrs_raw = drows["ids"].to_numpy()[order]
-        m = len(ids)
-        arrs = [
-            None if a is None else np.asarray(a, dtype=np.int64) for a in arrs_raw
-        ]
-        src_all = prs["src"].to_numpy(dtype=np.int64)
-        dst_all = prs["dst"].to_numpy(dtype=np.int64)
-        if dedup_pairs and len(src_all):
-            both = np.unique(np.stack([src_all, dst_all], axis=1), axis=0)
-            src_all, dst_all = both[:, 0], both[:, 1]
-        pos_s = np.searchsorted(ids, src_all)
-        pos_d = np.searchsorted(ids, dst_all)
-        ok_s = (pos_s < m) & (ids[np.minimum(pos_s, m - 1)] == src_all)
-        ok_d = (pos_d < m) & (ids[np.minimum(pos_d, m - 1)] == dst_all)
-        present = ok_s & ok_d
-        src_all, dst_all = src_all[present], dst_all[present]
-        ia, ib = pos_s[present], pos_d[present]
-        n = len(src_all)
-        inter = np.zeros(n, dtype=np.int64)
-        for i in range(n):
-            ua, ub = arrs[ia[i]], arrs[ib[i]]
-            if ua is None or ub is None:
-                continue
-            sm, bg = (ua, ub) if ua.size <= ub.size else (ub, ua)
-            pos = np.searchsorted(bg, sm)
-            hit = pos < bg.size
-            inter[i] = np.count_nonzero(bg[pos[hit]] == sm[hit])
-        return pd.DataFrame({"src": src_all, "dst": dst_all, "inter_cnt": inter})
-
-    left_side = repl
-    right_side = pt.select(
-        F.col("t1").alias("u1"), F.col("t2").alias("u2"), "src", "dst"
-    )
-    if num_partitions:
-        left_side = left_side.repartition(num_partitions, "t1", "t2")
-        right_side = right_side.repartition(num_partitions, "u1", "u2")
+    ga = sets.select(F.col("doc_id").alias("src"), F.col("grams").alias("ga"))
+    gb = sets.select(F.col("doc_id").alias("dst"), F.col("grams").alias("gb"))
+    inter = F.size(F.array_intersect("ga", "gb")).cast("long").alias("inter_cnt")
     return (
-        left_side.groupBy("t1", "t2")
-        .cogroup(right_side.groupBy("u1", "u2"))
-        .applyInPandas(
-            lambda left, right: _tile(left, right),
-            "src long, dst long, inter_cnt long",
-        )
+        pairs.select("src", "dst")
+        .distinct()
+        .join(ga, "src")
+        .join(gb, "dst")
+        .select("src", "dst", inter)
     )
 
 

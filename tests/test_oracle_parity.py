@@ -141,6 +141,33 @@ class TestPPJoinPrefixFilter:
         assert prefix_cand < full_cand
 
 
+@pytest.mark.parametrize("name", ["ppjoin_pairs", "containment_pairs"])
+def test_gram_overlap_shuffle_join_matches_oracle(spark, name):
+    # at sf0.001 Spark always broadcasts the gram sets; here broadcasts
+    # are off, so the overlap count runs on shuffled joins, at sf0.01
+    sf_dir = SF_DIR.replace("sf0.001", "sf0.01")
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        sdf = entry_mod.queries()[name](spark, sf_dir)
+        plan = sdf._jdf.queryExecution().executedPlan().toString()
+        spark_rows = [tuple(r) for r in sdf.collect()]
+    finally:
+        spark.conf.set(key, saved)
+    assert "BroadcastExchange" not in plan
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM '{sf_dir}/documents.parquet'"
+    )
+    res = con.execute(entry_mod.oracle_sql()[name])
+    duck_cols = [d[0].lower() for d in res.description]
+    duck_rows = res.fetchall()
+    assert len(duck_rows) > 0
+    spark_cols = [c.lower() for c in sdf.columns]
+    assert _rowset(spark_cols, spark_rows) == _rowset(duck_cols, duck_rows)
+
+
 def test_all_queries_run_and_nonempty(spark):
     # rows-only entries at least execute and return a stable schema
     for name, q in entry_mod.queries().items():

@@ -784,6 +784,18 @@ class TestSimilaritySearch:
         recall = len(truth & got) / len(truth)
         assert recall >= 0.95, f"SRP top-1@5 recall {recall}"
 
+    def test_bruteforce_query_cap(self, spark):
+        from photo_dedup_spark.operators.similarity import (
+            MAX_QUERY_ROWS,
+            cosine_topk_bruteforce,
+        )
+
+        queries = spark.range(MAX_QUERY_ROWS + 1).select(
+            F.col("id").alias("vec_id"), F.array(F.lit(1.0)).alias("embedding")
+        )
+        with pytest.raises(ValueError, match=f"more than {MAX_QUERY_ROWS} query rows"):
+            cosine_topk_bruteforce(queries, queries, k=1)
+
     def test_ivf_planted_twins_and_uniform_recall(self, spark):
         """IVF (data-adaptive coarse quantizer) — two contracts:
 

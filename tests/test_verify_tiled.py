@@ -142,3 +142,61 @@ class TestInlinePairExpansion:
         assert routes[(7, 777)] == "salted"
         assert routes[(9, 999)] == "overflow"
         assert all(v == "plain" for k, v in routes.items() if k[1] < 100)
+
+
+class TestPairOverlapCounts:
+    """The JVM gram-set overlap counter against a Python brute force
+    ``len(set(a) & set(b))``, with the set table broadcast and with
+    broadcasts off (both endpoint joins shuffled)."""
+
+    SETS = {
+        1: ["a b c", "b c d", "c d e", "d e f"],
+        2: ["b c d", "c d e", "x y z"],
+        3: ["p q r", "q r s"],  # disjoint from 1 and 2
+        4: ["a b c"],  # single-gram set
+        5: ["a b c", "b c d", "c d e", "d e f", "e f g"],
+    }
+    PAIRS = [
+        (1, 2), (1, 2), (1, 2),  # duplicates: one output row
+        (1, 3), (2, 3),  # disjoint: inter_cnt 0 is emitted
+        (1, 4), (4, 5), (3, 4),  # single-gram set
+        (1, 5), (2, 5),
+        (1, 99), (98, 2),  # endpoint without a set row: dropped
+    ]
+
+    def _frames(self, spark):
+        sets = spark.createDataFrame(
+            list(self.SETS.items()), "doc_id long, grams array<string>"
+        )
+        pairs = spark.createDataFrame(self.PAIRS, "src long, dst long")
+        return pairs, sets
+
+    def _expected(self):
+        return {
+            (s, d): len(set(self.SETS[s]) & set(self.SETS[d]))
+            for s, d in self.PAIRS
+            if s in self.SETS and d in self.SETS
+        }
+
+    @pytest.mark.parametrize(
+        "threshold, join", [(None, "BroadcastHashJoin"), ("-1", "SortMergeJoin")]
+    )
+    def test_matches_bruteforce(self, spark, threshold, join):
+        from photo_dedup_spark.operators.verify import pair_overlap_counts
+
+        pairs, sets = self._frames(spark)
+        key = "spark.sql.autoBroadcastJoinThreshold"
+        saved = spark.conf.get(key)
+        if threshold is not None:
+            spark.conf.set(key, threshold)
+        try:
+            out = pair_overlap_counts(pairs, sets)
+            rows = out.collect()
+            plan = out._jdf.queryExecution().executedPlan().toString()
+        finally:
+            spark.conf.set(key, saved)
+        assert join in plan
+        got = [(r.src, r.dst, r.inter_cnt) for r in rows]
+        assert len(got) == len({(s, d) for s, d, _ in got}), "pairs not deduped"
+        assert {(s, d): c for s, d, c in got} == self._expected()
+        assert (1, 3, 0) in got and (4, 5, 1) in got
